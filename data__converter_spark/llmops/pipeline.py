@@ -302,7 +302,7 @@ def _verify_pairs(
 # EVERY entry point, not just the compactor's — ADVICE r12: a compactor
 # crash between renames leaves the live table demoted until repaired).
 _STATE_TABLES = (
-    "digests", "bloom", "front", "buckets", "pairs",
+    "digests", "front", "buckets", "pairs",
     "assign", "assign_delta", "params",
 )
 
@@ -321,8 +321,7 @@ _SEMANTIC_PARAMS = (
 # writers and every reader, so reads can skip footer inference.
 _PARAMS_SCHEMA = (
     "k int, num_hashes int, bands int, seed int, "
-    "threshold double, train_permille int, val_permille int, "
-    "m_bits int, k_hashes int"
+    "threshold double, train_permille int, val_permille int"
 )
 
 
@@ -366,10 +365,7 @@ def _digests_schema(id_field):
 # floor (~10 state-table reads per ingest call), so the schema contract
 # above — derivable because this module WRITES every one of these
 # tables with fixed column types — removes ~8 pure-metadata jobs per
-# ingest and several more per build/compact.  The bloom table is the
-# deliberate exception: its geometry columns are probed tolerantly
-# (:func:`_bloom_geometry` must accept tables without them), so that
-# one read keeps inference.
+# ingest and several more per build/compact.
 
 
 class ConcurrentStateWriterError(RuntimeError):
@@ -478,11 +474,9 @@ def _release_lease(spark, path: str, token: str | None = None) -> None:
     fs.delete(lease, False)
 
 
-def _check_params(spark, path: str, **args) -> dict:
+def _check_params(spark, path: str, **args) -> None:
     """Validate the caller's semantic parameters against the state's
-    persisted manifest (fail loudly on any mismatch) and return the
-    manifest row as a dict — the authoritative source for the bloom
-    geometry defaults."""
+    persisted manifest (fail loudly on any mismatch)."""
     row = (
         spark.read.schema(_PARAMS_SCHEMA)
         .parquet(f"{path}/params")
@@ -505,21 +499,6 @@ def _check_params(spark, path: str, **args) -> dict:
             "different values would silently break the no-false-negative "
             "and no-straddle guarantees. Rebuild the state to change them."
         )
-    return row
-
-
-def _bloom_geometry(spark, path: str, default_m: int, default_k: int):
-    """(bloom_df, m_bits, k_hashes) with the geometry read from the
-    bloom table's OWN columns when present — the table and the
-    arithmetic readers must use travel as one atomically-swapped
-    artifact, so a compactor resize can never leave readers probing a
-    new table with old geometry (VERDICT r12 Next #3)."""
-    bt = spark.read.parquet(f"{path}/bloom")
-    if "m_bits" in bt.columns:
-        r = bt.select("m_bits", "k_hashes").limit(1).collect()
-        if r:
-            return bt, int(r[0][0]), int(r[0][1])
-    return bt, default_m, default_k
 
 
 def _current_assign(
@@ -649,8 +628,6 @@ def ingest_state_build(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
     train_permille: int = 800,
     val_permille: int = 100,
 ) -> None:
@@ -662,11 +639,7 @@ def ingest_state_build(
     recomputing per batch:
 
     - ``digests`` (id, dg): sha256 content digests — the exact-dedup
-      confirmation side and the live-id roll;
-    - ``bloom`` (pos, m_bits, k_hashes): the corpus membership
-      sketch's set-bit position table (mergeable: new batches OR in
-      their bits) carrying its OWN geometry, so a compactor resize
-      swaps table and probe arithmetic atomically;
+      membership side and the live-id roll;
     - ``front`` (id, hs, sig): the minhash front — shingle-hash sets
       + signatures from ONE Arrow pass over the corpus text, the pass
       that is never repeated again;
@@ -691,17 +664,16 @@ def ingest_state_build(
     this it is paid once.
 
     r14 (guide §2.6/§7.2): each derived table reads BACK the artifact
-    it derives from (digests → bloom, front → buckets → pairs) instead
+    it derives from (front → buckets → pairs → assign) instead
     of re-planning the upstream cached subtree — the read-back severs
     lineage for free exactly as the assign step always did, so the
     pairs verify scans two flat parquet tables instead of a plan
     embedding the corpus Arrow kernel twice — and the two independent
-    write chains (digests→bloom→params vs front→buckets→pairs→assign)
-    overlap from driver threads, back-filling the scheduler slots each
+    write chains (digests vs front→buckets→pairs→assign) overlap
+    from driver threads, back-filling the scheduler slots each
     small job's tail leaves idle."""
     from ..scale import run_jobs
     from .dedup import _band_frame, _minhash_front, cluster_split
-    from .sketches import bloom_build
 
     spark = corpus.sparkSession
     rows_per_band = num_hashes // bands
@@ -714,13 +686,6 @@ def ingest_state_build(
         corpus.select(F.col(id_col), digest.alias("dg")).write.mode(
             "overwrite"
         ).parquet(f"{path}/digests")
-        bloom_build(
-            spark.read.schema(_digests_schema(id_field))
-            .parquet(f"{path}/digests").select("dg").distinct(),
-            "dg", m_bits, k_hashes,
-        ).withColumn("m_bits", F.lit(int(m_bits))).withColumn(
-            "k_hashes", F.lit(int(k_hashes))
-        ).write.mode("overwrite").parquet(f"{path}/bloom")
 
     def _chain_front():
         # cache=False: the write is the kernel's only materialization —
@@ -776,8 +741,7 @@ def ingest_state_build(
         [
             (
                 int(k), int(num_hashes), int(bands), int(seed),
-                float(threshold), int(train_permille),
-                int(val_permille), int(m_bits), int(k_hashes),
+                float(threshold), int(train_permille), int(val_permille),
             )
         ],
         _PARAMS_SCHEMA,
@@ -805,17 +769,12 @@ def ingest_pipeline_incremental(
     ``minhash_lsh_pairs`` over corpus ∪ survivors re-paired the
     whole live set every time).  Per batch:
 
-    1. **Decontaminate** against the STANDING sketch: the batch's
-       digests test against the materialized bloom position table
-       (geometry read from the table itself — it is STATE-OWNED, not
-       a caller parameter; transport size-gated per
-       :func:`~.sketches.bloom_maybe_contains`, so a compactor-grown
-       corpus-scale bloom streams instead of broadcasting); only
-       maybe-hits reach the confirmation join, which SCANS the
-       standing ``digests`` table against a broadcast of the
-       batch-sized candidate digests.  Identical verdicts to
-       :func:`~.dedup.bloom_prescreen_dedup` (no false negatives;
-       ``confirmed`` = exact digest membership).
+    1. **Decontaminate** by exact digest membership: one semi-join
+       SCANS the standing ``digests`` table against a broadcast of the
+       batch's own digests — the same ``confirmed`` set as the
+       full-repair form's decontaminate step.  No sketch prescreens
+       it: a maybe-set could only shrink the broadcast side of this
+       same corpus scan, never let the scan be skipped.
     2. **Pair incrementally**: the survivors' minhash front (one
        Arrow pass over BATCH text only) band-joins the standing
        ``buckets`` postings for batch-vs-corpus candidates, plus a
@@ -843,12 +802,7 @@ def ingest_pipeline_incremental(
     4. **Commit the batch into the state**: append front / buckets /
        pairs rows, append the receipt's assignment rows (survivors ∪
        reassignments) to ``assign_delta`` under a deterministic
-       (batch_key, seq) stamp, OR the survivors' bits into the bloom
-       (an APPEND of the batch's own position rows — r14: the r13
-       union+distinct+swap rewrote the corpus-sized position table
-       every batch; the probe tolerates duplicate positions and the
-       compactor re-distincts, so the steady-state bloom write is now
-       batch-sized), and append ``digests`` LAST — the
+       (batch_key, seq) stamp, and append ``digests`` LAST — the
        commit point.  Crash replay is IDEMPOTENT end to end: the
        batch's survivors are still absent from ``digests`` so they
        re-survive; ``batch_key`` is a pure function of the survivor
@@ -880,18 +834,17 @@ def ingest_pipeline_incremental(
     """
     from ..scale import persisted, run_jobs
     from .dedup import _band_frame, _minhash_front, cluster_split
-    from .sketches import bloom_build, bloom_maybe_keys
     from .similarity import _staged_swap_recover, _tf_of
 
     spark = batch.sparkSession
     rows_per_band = num_hashes // bands
-    # self-heal every swap-managed table, not just the bloom (ADVICE
-    # r12): a compactor crash between its renames leaves that table
-    # demoted until SOMEONE probes — the ingest must not be the caller
-    # that dies on a missing directory the contract says it repairs.
+    # self-heal every swap-managed table (ADVICE r12): a compactor
+    # crash between its renames leaves that table demoted until
+    # SOMEONE probes — the ingest must not be the caller that dies on
+    # a missing directory the contract says it repairs.
     for t in _STATE_TABLES:
         _staged_swap_recover(spark, f"{path}/{t}")
-    prm = _check_params(
+    _check_params(
         spark, path, k=k, num_hashes=num_hashes, bands=bands, seed=seed,
         threshold=threshold, train_permille=train_permille,
         val_permille=val_permille,
@@ -902,40 +855,26 @@ def ingest_pipeline_incremental(
         digests_t = spark.read.schema(_digests_schema(id_field)).parquet(
             f"{path}/digests"
         )
-        bloom_t, mb, kh = _bloom_geometry(
-            spark, path, prm["m_bits"], prm["k_hashes"]
-        )
 
         digest = F.sha2(F.coalesce(F.col(col).cast("string"), F.lit("")), 256)
         new_keys = persisted(batch.select(F.col(id_col), digest.alias("dg")))
-        # bloom verdict FUSED with the digest confirm (r15, VERDICT r14
-        # #1): only the maybe-SET feeds the confirm join, so the full
-        # per-key verdict frame (and its join-back onto the probe keys)
-        # is never built — bloom_maybe_keys is the same size-gated
-        # probe minus one broadcast join per ingest.  Verdicts are
-        # unchanged: maybe-keys has no false negatives, and the confirm
-        # below is exact digest membership either way.
-        maybe_keys = bloom_maybe_keys(
-            new_keys.select("dg"), bloom_t, "dg", mb, kh
-        )
         # confirm by SCANNING the corpus-scale digests table against a
-        # broadcast of the batch-sized maybe-set (not the other way
-        # around — a left-semi with the corpus on the right would
-        # shuffle it); duplicate dg values in digests are absorbed by
-        # the anti-join below.
+        # broadcast of the batch's digests (not the other way around —
+        # a left-semi with the corpus on the right would shuffle it);
+        # duplicate dg values in digests are absorbed by the anti-join
+        # below.
         confirmed = digests_t.select("dg").join(
-            F.broadcast(maybe_keys), "dg", "left_semi"
+            F.broadcast(new_keys.select("dg")), "dg", "left_semi"
         )
         # EAGER localCheckpoint rather than persist (r15): surv_keys is
         # the batch's survivor (id, dg) set — referenced by the batch
-        # key, the survivor semi-join, AND (new this round) the commit
-        # block's bloom/digests appends.  A persist keeps lineage over
-        # the PRE-COMMIT digests listing, which is why the appends had
-        # to re-derive the digests from the receipt ⋈ batch (two extra
-        # corpus-text scans per ingest); the checkpoint has no lineage
-        # to go stale, so the appends read the materialized batch-sized
-        # blocks directly.  Failure-tolerance trade documented on
-        # ingest_pipeline_incremental.
+        # key, the survivor semi-join, AND the commit block's digests
+        # append.  A persist keeps lineage over the PRE-COMMIT digests
+        # listing, so the append would have to re-derive the digests
+        # from the receipt ⋈ batch (extra corpus-text scans); the
+        # checkpoint has no lineage to go stale, so the append reads
+        # the materialized batch-sized blocks directly.  Failure-
+        # tolerance trade documented on ingest_pipeline_incremental.
         surv_keys = _pin(new_keys.join(confirmed, "dg", "left_anti"))
         # deterministic batch identity: an order-independent reduction
         # of the survivor digest set (+ count).  A crash replay, whose
@@ -1106,28 +1045,23 @@ def ingest_pipeline_incremental(
             # 4 for the ordering / replay-idempotence argument); every
             # write below derives from the durable receipt, the
             # caller's batch, or frames whose source tables are not
-            # yet mutated at that point in the sequence.  The five
-            # pre-commit appends touch five DISJOINT tables and the
+            # yet mutated at that point in the sequence.  The four
+            # pre-commit appends touch four DISJOINT tables and the
             # replay contract only requires the ``digests`` append
             # (the commit point) to land strictly LAST: a crash used
             # to leave a sequential prefix of the appends, now it
             # leaves an arbitrary subset, and replay absorbs either
             # identically (duplicate edges/postings/delta rows fold
-            # away).  So the five run OVERLAPPED from driver threads
+            # away).  So the four run OVERLAPPED from driver threads
             # (guide §2.6) — each is a sub-second batch-sized job
             # whose tail would otherwise leave the scheduler idle.
-            # The survivors' (id, dg) rows ARE the checkpointed
-            # surv_keys frame (r15): the receipt's kind='batch' ids
+            # The digests commit writes the checkpointed surv_keys
+            # frame directly (r15): the receipt's kind='batch' ids
             # equal surv_ids by construction (batch_assign is
-            # assign_new semi-joined on them), and the old
-            # receipt ⋈ batch re-derivation — needed when surv_keys was
-            # a persist whose lineage embedded the PRE-COMMIT digests
-            # listing — re-scanned the batch text once per consuming
-            # append.  The checkpoint is lineage-free, so a cache-
-            # evicted block can never be recomputed against mutated
-            # state; on replay the whole call re-runs and recomputes an
-            # identical surv_keys.
-            dg_new = surv_keys
+            # assign_new semi-joined on them), and the checkpoint is
+            # lineage-free, so a cache-evicted block can never be
+            # recomputed against mutated state; on replay the whole
+            # call re-runs and recomputes an identical surv_keys.
 
             def _append_pairs():
                 new_pairs.write.mode("append").parquet(f"{path}/pairs")
@@ -1148,28 +1082,10 @@ def ingest_pipeline_incremental(
             def _append_front():
                 f_new.write.mode("append").parquet(f"{path}/front")
 
-            def _append_bloom():
-                # OR-in = APPEND of the batch's own position rows
-                # (r14): the union+distinct+staged-swap form rewrote
-                # (and shuffled) the corpus-sized position table on
-                # every batch — a per-batch corpus-scale term in the
-                # exact loop built to avoid them.  The probe counts
-                # distinct seeds, so duplicate positions are harmless;
-                # the compactor's rebuild re-distincts.  No input
-                # .distinct() either (r15): bloom_build distincts its
-                # POSITION output anyway, so the key-side exchange only
-                # pre-shrank a batch-sized explode.
-                bloom_build(
-                    dg_new.select("dg"), "dg", mb, kh
-                ).withColumn("m_bits", F.lit(int(mb))).withColumn(
-                    "k_hashes", F.lit(int(kh))
-                ).write.mode("append").parquet(f"{path}/bloom")
-
             run_jobs(
-                _append_pairs, _append_delta, _append_buckets,
-                _append_front, _append_bloom,
+                _append_pairs, _append_delta, _append_buckets, _append_front,
             )
-            dg_new.write.mode("append").parquet(f"{path}/digests")
+            surv_keys.write.mode("append").parquet(f"{path}/digests")
         # Release THIS call's cached frames now that the receipt and
         # the state commits are durable: their plans embed pre-commit
         # file listings of the state tables, and Spark's CacheManager
@@ -1212,7 +1128,6 @@ def _next_seq(spark, path: str, batch_key: str, id_field=None) -> int:
 def ingest_state_compact(
     spark,
     path: str,
-    m_bits: int | None = None,
     lease_ttl_s: float = 3600.0,
 ) -> None:
     """OPTIMIZE for the standing ingest state — the companion the
@@ -1235,57 +1150,34 @@ def ingest_state_compact(
     - ``assign``: the delta overrides fold into the base
       (:func:`_current_assign` materialized) and the delta resets to
       empty — order matters: base first, so a crash between the two
-      swaps leaves delta rows that merely duplicate the folded base;
-    - ``bloom``: REBUILT from the folded digests at a corpus-sized
-      geometry (VERDICT r12 Next #3 — bits only ever OR in, so past
-      the design point the false-positive rate → 1 and the prescreen
-      silently stops earning its keep; verdicts stay correct either
-      way because membership is always confirmed against
-      ``digests``).  ``m_bits`` picks the new size; None auto-sizes
-      to the smallest power of two ≥ 16·n_keys (≈0.5% FPR at
-      k_hashes=3), never shrinking below the build-time size.  The
-      new geometry travels IN the bloom table's own columns, so the
-      resize swaps table and probe arithmetic atomically; the params
-      manifest is swapped after it for bookkeeping (a crash between
-      the two is harmless — readers take geometry from the bloom).
+      swaps leaves delta rows that merely duplicate the folded base.
 
-    Never required for correctness; run it when replay debt, delta
-    churn, or bloom saturation makes the state noticeably fatter or
-    slower than the corpus warrants."""
-    import math
+    The ``params`` manifest is neither read nor rewritten: nothing a
+    compaction does changes a semantic parameter.
 
-    from pyspark.sql import functions as F
-
-    from .sketches import bloom_build
+    Never required for correctness; run it when replay debt or delta
+    churn makes the state noticeably fatter or slower than the corpus
+    warrants."""
     from .similarity import _staged_swap, _staged_swap_recover
 
     for t in _STATE_TABLES:
         _staged_swap_recover(spark, f"{path}/{t}")
-    prm = (
-        spark.read.schema(_PARAMS_SCHEMA)
-        .parquet(f"{path}/params")
-        .collect()[0]
-        .asDict()
-    )
     token = _acquire_lease(spark, path, lease_ttl_s)
     try:
         # The folds run in dependency-respecting PARALLEL WAVES (r14,
         # guide §2.6) — each swap is a small job whose tail leaves the
-        # scheduler idle, and the only cross-table reads are the
-        # assign fold (reads digests/assign/assign_delta) and the
-        # bloom rebuild (reads the FOLDED digests):
+        # scheduler idle, and the only cross-table read is the assign
+        # fold (reads digests/assign/assign_delta):
         #   wave 1: front / buckets / pairs dedup swaps ∥ assign fold
         #           (digests and the delta are still unmutated here);
         #   wave 2: digests dedup swap ∥ delta reset (the fold that
-        #           read them both is durable);
-        #   wave 3: bloom rebuild from the folded digests;
-        #   then the params manifest, last as before.
+        #           read them both is durable).
         # A crash mid-wave leaves each table either old or new — the
         # same per-table atomicity as the sequential order, and the
         # entry recovery probe repairs any half-swapped table.
         from pyspark.sql import types as T
 
-        from ..scale import persisted, run_jobs
+        from ..scale import run_jobs
 
         front = spark.read.parquet(f"{path}/front")
         id_field = front.schema.fields[0]
@@ -1336,38 +1228,6 @@ def ingest_state_compact(
                 .parquet(f"{path}/assign_delta").limit(0),
                 f"{path}/assign_delta",
             ),
-        )
-        digests = spark.read.schema(_digests_schema(id_field)).parquet(
-            f"{path}/digests"
-        )
-        _, cur_m, cur_k = _bloom_geometry(
-            spark, path, prm["m_bits"], prm["k_hashes"]
-        )
-        # one distinct-key pass shared by the auto-size count and the
-        # rebuild (was computed twice)
-        dgd = persisted(digests.select("dg").distinct())
-        if m_bits is None:
-            n = dgd.count()
-            m_bits = max(
-                cur_m, 1 << max(10, math.ceil(math.log2(max(16 * n, 2))))
-            )
-        _staged_swap(
-            bloom_build(dgd, "dg", m_bits, cur_k)
-            .withColumn("m_bits", F.lit(int(m_bits)))
-            .withColumn("k_hashes", F.lit(int(cur_k))),
-            f"{path}/bloom",
-        )
-        dgd.unpersist()
-        prm["m_bits"] = int(m_bits)
-        _staged_swap(
-            spark.createDataFrame(
-                [tuple(prm[c] for c in (
-                    "k", "num_hashes", "bands", "seed", "threshold",
-                    "train_permille", "val_permille", "m_bits", "k_hashes",
-                ))],
-                _PARAMS_SCHEMA,
-            ),
-            f"{path}/params",
         )
     finally:
         _release_lease(spark, path, token)

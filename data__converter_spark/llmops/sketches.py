@@ -303,10 +303,10 @@ def bloom_build(
     membership join plan-visible).
 
     Positions are md5(seed:key) mod m — the same engine-portable hash
-    family as the CMS grid.  Consumers that maintain a STANDING bloom
-    (the ingest state) may append per-batch position tables instead of
-    re-distincting the union — :func:`bloom_maybe_contains` tolerates
-    duplicate ``pos`` rows, so the OR-in stays batch-sized."""
+    family as the CMS grid.  Position tables merge by union: a filter
+    grown by appending per-batch position tables need not re-distinct
+    them — :func:`bloom_maybe_contains` tolerates duplicate ``pos``
+    rows."""
     seeds = F.explode(F.array(*[F.lit(s) for s in range(k_hashes)])).alias("seed")
     rows = keys.select(F.col(key_col).cast("string").alias("k"), seeds)
     return rows.select(_cms_bucket("seed", "k", m_bits).alias("pos")).distinct()
@@ -316,12 +316,11 @@ def bloom_build(
 # (the row count is <= min(m_bits, k*n)): below it the table rides a
 # broadcast to every probe task; above it the transport INVERTS — the
 # batch-sized probe positions broadcast instead and the position table
-# is streamed as a plain scan.  VERDICT r13 #2: a standing bloom
-# auto-sized to m ~= 16n grows ~3 position rows per corpus document,
-# so an unconditional broadcast is a driver OOM at the 10^8-doc corpus
-# the steady-state ingest loop exists for.  2^20 bits ~= 1M rows of one
-# long (~8 MB raw) keeps the broadcast comfortably inside executor
-# memory; every sandbox-scale state sits far below it.
+# is streamed as a plain scan.  VERDICT r13 #2: a bloom sized to
+# m ~= 16n grows ~3 position rows per key, so an unconditional
+# broadcast is a driver OOM at a 10^8-key set.  2^20 bits ~= 1M rows
+# of one long (~8 MB raw) keeps the broadcast comfortably inside
+# executor memory; every sandbox-scale filter sits far below it.
 BLOOM_BROADCAST_MAX_BITS = 1 << 20
 
 
@@ -354,25 +353,6 @@ def bloom_maybe_contains(
 
     Both paths produce identical verdicts; only the physical transport
     differs."""
-    pk, hits = _bloom_hits(
-        probes, bloom, key_col, m_bits, k_hashes, broadcast_max_bits
-    )
-    return pk.join(hits, "k", "left").select(
-        "k", (F.coalesce("n_set", F.lit(0)) == F.lit(k_hashes)).alias("maybe")
-    )
-
-
-def _bloom_hits(
-    probes: DataFrame,
-    bloom: DataFrame,
-    key_col: str,
-    m_bits: int,
-    k_hashes: int,
-    broadcast_max_bits: int | None,
-):
-    """Shared core of the bloom probe: (pk, hits) where ``pk`` is the
-    distinct cast probe keys and ``hits`` is (k, n_set) for keys with
-    at least one set position — both size-gated transports."""
     limit = (
         BLOOM_BROADCAST_MAX_BITS
         if broadcast_max_bits is None
@@ -396,32 +376,8 @@ def _bloom_hits(
             .groupBy("k")
             .agg(F.countDistinct("seed").alias("n_set"))
         )
-    return pk, hits
-
-
-def bloom_maybe_keys(
-    probes: DataFrame,
-    bloom: DataFrame,
-    key_col: str = "h",
-    m_bits: int = 16384,
-    k_hashes: int = 3,
-    broadcast_max_bits: int | None = None,
-) -> DataFrame:
-    """The MAYBE-SET alone: distinct probe keys the bloom cannot rule
-    out — exactly ``bloom_maybe_contains(...).filter('maybe')``'s key
-    column, with the per-key verdict join-back ELIDED (r15, guide
-    §1.2/§7.2): consumers that only prescreen a confirmation join (the
-    incremental ingest's digest confirm) never read the ``maybe=false``
-    rows, so materializing the full verdict frame paid one broadcast
-    join per probe for rows that were immediately filtered away.  A key
-    is maybe iff ALL ``k_hashes`` positions are set; no false negatives,
-    same size-gated transport as :func:`bloom_maybe_contains`.  Output:
-    one column named after ``key_col``."""
-    _pk, hits = _bloom_hits(
-        probes, bloom, key_col, m_bits, k_hashes, broadcast_max_bits
-    )
-    return hits.filter(F.col("n_set") == F.lit(k_hashes)).select(
-        F.col("k").alias(key_col)
+    return pk.join(hits, "k", "left").select(
+        "k", (F.coalesce("n_set", F.lit(0)) == F.lit(k_hashes)).alias("maybe")
     )
 
 

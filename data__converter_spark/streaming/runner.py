@@ -641,9 +641,9 @@ def run_ingest_update(
     :func:`~data__converter_spark.llmops.pipeline.
     ingest_pipeline_incremental` — VERDICT r12 Next #6): every
     micro-batch of arriving documents runs the full steady-state
-    ingest against the state at ``path`` (bloom prescreen -> digest
-    confirm -> band-join vs standing postings -> exact-Jaccard verify
-    -> cluster/split assign + reassignment receipts -> ordered state
+    ingest against the state at ``path`` (exact digest confirm ->
+    band-join vs standing postings -> exact-Jaccard verify ->
+    cluster/split assign + reassignment receipts -> ordered state
     commit), and the batch's receipt appends to ``{path}/receipts``
     stamped with the micro-batch epoch — the continuous change feed a
     shard router consumes, while ``ingest_state_assignments`` stays

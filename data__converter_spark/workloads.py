@@ -10735,8 +10735,8 @@ def q_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STEADY-STATE ingest (llmops/pipeline.py:
     ingest_pipeline_incremental — VERDICT r11 Next #2): the standing
     corpus (md5-permille b < 700) materializes its dedup front-end
-    ONCE as the ingest state (digests, bloom bits, minhash front,
-    band-bucket postings, verified pairs — ingest_state_build), then
+    ONCE as the ingest state (digests, minhash front, band-bucket
+    postings, verified pairs — ingest_state_build), then
     TWO batches arrive in sequence (b in [700, 850), then b >= 850)
     and each is processed against the state with no corpus-scale
     recomputation: batch text is the only text read, batch-vs-corpus
@@ -10931,29 +10931,23 @@ FROM bkt
 
 
 def q_ingest_compact_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLOOM LIFECYCLE under ingest (llmops/pipeline.py:
-    ingest_state_compact — VERDICT r12 Next #3): the standing state
-    (even doc_ids, md5-permille b < 700) is built with a DELIBERATELY
-    undersized membership sketch (m_bits=128 — saturated from day
-    one, prescreen passing ~everything to the confirmation join),
-    batch 1 (b in [700, 850)) ingests against it, then the compactor
-    folds the state AND rebuilds the bloom at an auto-sized
-    corpus-scale geometry carried in the table's own columns; batch 2
-    (b >= 850) ingests against the resized sketch.  Verdicts must be
-    IDENTICAL to the right-sized run — the bloom only prescreens,
-    membership is always confirmed against digests — so the oracle is
-    the same hand-staged two-batch full-repair SQL, on the halved doc
-    set.  Returned: batch-2 assignments (full-repair schema)."""
+    """A compaction between two batches changes no verdict
+    (llmops/pipeline.py: ingest_state_compact): the standing state
+    (quarter doc set, md5-permille b < 700) is built, batch 1 (b in
+    [700, 850)) ingests against it, the compactor folds every state
+    table, and batch 2 (b >= 850) ingests against the compacted
+    state.  The oracle is the same hand-staged two-batch full-repair
+    SQL, on the quarter doc set.  Returned: batch-2 assignments
+    (full-repair schema)."""
     from .llmops.pipeline import (
         ingest_pipeline_incremental,
         ingest_state_build,
         ingest_state_compact,
     )
 
-    # quarter doc set: this query gates the bloom-lifecycle SEMANTICS
-    # (resize changes no verdict) through the driver; the saturation
-    # economics are measured in SCALE.md and pinned in pytest, so the
-    # gate stays light rather than re-paying the full corpus build
+    # quarter doc set: this query gates the compaction SEMANTICS
+    # through the driver, so the gate stays light rather than
+    # re-paying the full corpus build
     docs = _load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 == 0
     )
@@ -10965,7 +10959,7 @@ def q_ingest_compact_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch1 = docs.filter((split_b >= 700) & (split_b < 850))
     batch2 = docs.filter(split_b >= 850)
     path = _scratch_dir(spark, "ingest_resize_state")
-    ingest_state_build(corpus, path, m_bits=128)
+    ingest_state_build(corpus, path)
     ingest_pipeline_incremental(batch1, path)
     ingest_state_compact(spark, path)
     return (
@@ -10978,8 +10972,8 @@ def q_ingest_compact_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["ingest_compact_resize"] = q_ingest_compact_resize
 
 # ingest_incremental's two-stage live-set surgery, on the quarter
-# doc set (doc_id % 4 = 0) — the bloom geometry can never change a
-# verdict, so the full-repair SQL is unchanged in shape.
+# doc set (doc_id % 4 = 0) — a compaction can never change a verdict,
+# so the full-repair SQL is unchanged in shape.
 _CC_LIVE2H = _CC.replace("FROM documents\n)", "FROM live\n)", 1).replace(
     "WITH RECURSIVE words_cte AS (",
     """WITH RECURSIVE d0 AS (

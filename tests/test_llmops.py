@@ -2627,8 +2627,8 @@ def test_ingest_state_replay_idempotence_and_compact(spark, tmp_path):
 
 @pytest.mark.slow
 def test_ingest_replay_after_arbitrary_commit_subset_crash(spark, tmp_path):
-    """r15 (VERDICT r14 Next #4): the five pre-commit appends (pairs,
-    assign_delta, buckets, front, bloom) run OVERLAPPED via run_jobs,
+    """r15 (VERDICT r14 Next #4): the four pre-commit appends (pairs,
+    assign_delta, buckets, front) run OVERLAPPED via run_jobs,
     so a crash before the ``digests`` commit point can leave an
     ARBITRARY subset of them landed — states impossible under the old
     sequential order.  Pin the replay contract for two distinct
@@ -2667,10 +2667,10 @@ def test_ingest_replay_after_arbitrary_commit_subset_crash(spark, tmp_path):
     ref_assign = key(ingest_state_assignments(spark, ref))
     r2 = key(ingest_pipeline_incremental(batch2, ref, **kw))
 
-    tables = ["pairs", "assign_delta", "buckets", "front", "bloom", "digests"]
+    tables = ["pairs", "assign_delta", "buckets", "front", "digests"]
     # two distinct landed-subsets (digests NEVER lands — it is the
-    # commit point): the verdict's example state, and its complement
-    for landed in ({"bloom", "front"}, {"pairs", "assign_delta", "buckets"}):
+    # commit point): one append alone, and its complement
+    for landed in ({"front"}, {"pairs", "assign_delta", "buckets"}):
         path = str(tmp_path / ("state_" + "_".join(sorted(landed))))
         ingest_state_build(corpus, path, **kw)
         pre_assign = key(ingest_state_assignments(spark, path))
@@ -2883,7 +2883,7 @@ def test_ingest_reassign_on_undercut_min_id(spark, tmp_path):
 def test_ingest_params_manifest_validation(spark, tmp_path):
     """r13 (ADVICE r12): the state persists its semantic parameters at
     build time and a mismatched re-supply fails loudly instead of
-    silently voiding the bloom / banding guarantees."""
+    silently voiding the LSH banding / split guarantees."""
     import pytest
 
     from data__converter_spark.llmops.pipeline import (
@@ -3069,57 +3069,53 @@ def test_ingest_lease_blocks_batch_during_stream_microbatch(spark, tmp_path):
     assert ingest_pipeline_incremental(batch, path, **kw).count() >= 1
 
 
-def test_ingest_bloom_resize_restores_prescreen(spark, tmp_path):
-    """r13 (VERDICT r12 Next #3): a saturated bloom passes ~everything
-    through to the confirmation join; compaction rebuilds it at a
-    corpus-sized geometry carried IN the table, the pass-through rate
-    drops back toward the design FPR, and ingest verdicts are
-    identical before and after."""
-    from pyspark.sql import functions as F
+def test_ingest_compact_keeps_exact_verdicts(spark, tmp_path):
+    """The incremental ingest confirms batch digests by exact
+    membership alone: the state holds no Bloom table, a compaction
+    between two batches changes no verdict (an exact copy of a
+    standing or committed doc still drops, a fresh doc survives), and
+    compaction leaves the params manifest byte-for-byte unchanged."""
+    import os
 
     from data__converter_spark.llmops.pipeline import (
-        _bloom_geometry,
         ingest_pipeline_incremental,
         ingest_state_build,
         ingest_state_compact,
     )
-    from data__converter_spark.llmops.sketches import bloom_maybe_contains
 
     rows = [(i, f"standing document number {i} with body {i*7}")
             for i in range(120)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     path = str(tmp_path / "state")
-    # m_bits=64 with 120 keys * 3 hashes: effectively saturated
-    ingest_state_build(docs, path, m_bits=64, k_hashes=3)
+    ingest_state_build(docs, path)
+    assert "bloom" not in os.listdir(path)
 
-    probes = spark.createDataFrame(
-        [(f"fresh-key-{i}",) for i in range(400)], "dg string"
-    )
-    bt, m0, k0 = _bloom_geometry(spark, path, 64, 3)
-    assert m0 == 64
-    before = (
-        bloom_maybe_contains(probes, bt, "dg", m0, k0)
-        .filter("maybe").count()
-    )
-    assert before > 300  # saturated: nearly everything leaks through
+    def survivors(batch_rows):
+        batch = spark.createDataFrame(batch_rows, "doc_id long, text string")
+        receipt = ingest_pipeline_incremental(batch, path)
+        return {r["doc_id"] for r in receipt.filter("kind = 'batch'").collect()}
 
-    ingest_state_compact(spark, path)  # auto-resize from digest count
-    bt2, m1, k1 = _bloom_geometry(spark, path, 64, 3)
-    assert m1 >= 16 * 120 and k1 == k0
-    after = (
-        bloom_maybe_contains(probes, bt2, "dg", m1, k1)
-        .filter("maybe").count()
-    )
-    assert after < 40  # back near design FPR
+    def params_bytes():
+        root = f"{path}/params"
+        out = {}
+        for name in sorted(os.listdir(root)):
+            with open(os.path.join(root, name), "rb") as f:
+                out[name] = f.read()
+        return out
 
-    # verdicts unchanged: an exact dup still drops, fresh docs survive
-    batch = spark.createDataFrame(
-        [(500, rows[3][1]), (501, "genuinely new arrival text")],
-        "doc_id long, text string",
-    )
-    receipt = ingest_pipeline_incremental(batch, path)
-    ids = [r["doc_id"] for r in receipt.filter("kind = 'batch'").collect()]
-    assert 500 not in ids and 501 in ids
+    fresh = "genuinely new arrival text"
+    assert survivors([(500, rows[3][1]), (501, fresh)]) == {501}
+
+    before = params_bytes()
+    ingest_state_compact(spark, path)
+    assert params_bytes() == before
+
+    # exact copies of a standing doc and of batch 1's committed
+    # survivor both drop; the fresh doc survives
+    got = survivors([(600, rows[7][1]), (601, fresh),
+                     (602, "another fresh arrival after compaction")])
+    assert got == {602}
+    assert "bloom" not in os.listdir(path)
 
 
 @pytest.mark.slow
@@ -3222,107 +3218,6 @@ def test_run_ingest_update_stream_equals_batch(spark, tmp_path):
     assert got1 == w1 and got2 == w2
     assert key(ingest_state_assignments(spark, path)) == key(
         ingest_state_assignments(spark, ref))
-
-
-def _bcast_filescan_flags(df) -> list[bool]:
-    """For every BroadcastExchange in the EXECUTED plan (AQE off so the
-    tree is plain), whether its build side DIRECTLY carries a parquet
-    scan's rows — i.e. a file scan with no aggregation between scan
-    and broadcast.  A broadcast of an AGGREGATED frame that merely has
-    a scan upstream (the batch-sized hit counts) is the healthy shape;
-    a broadcast whose payload IS the table is the scale bug the bloom
-    transport gate exists to prevent."""
-    flags = []
-
-    def walk(jp):
-        name = jp.nodeName()
-        if "BroadcastExchange" in name:
-            ts = jp.treeString()
-            has_scan = "Scan parquet" in ts or "FileScan" in ts
-            reduced = "HashAggregate" in ts or "SortAggregate" in ts
-            flags.append(has_scan and not reduced)
-            return
-        kids = jp.children()
-        for i in range(kids.length()):
-            walk(kids.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return flags
-
-
-def test_ingest_bloom_large_geometry_streams_not_broadcasts(spark, tmp_path):
-    """r14 (VERDICT r13 #2 / Next #1): a standing bloom compacted to a
-    corpus-scale geometry must NOT ride a broadcast — above the size
-    gate the prescreen inverts, broadcasting the batch-sized probe
-    positions and STREAMING the position-table scan, with identical
-    verdicts and identical end-to-end ingest receipts."""
-    from pyspark.sql import functions as F
-
-    from data__converter_spark.llmops.pipeline import (
-        _bloom_geometry,
-        ingest_pipeline_incremental,
-        ingest_state_build,
-        ingest_state_compact,
-    )
-    from data__converter_spark.llmops.sketches import (
-        BLOOM_BROADCAST_MAX_BITS,
-        bloom_maybe_contains,
-    )
-
-    rows = [(i, f"standing corpus document {i} carrying payload {i * 13}")
-            for i in range(80)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [(200, rows[5][1]),                       # exact dup -> drops
-         (201, "a genuinely novel arriving document")],
-        "doc_id long, text string",
-    )
-    key = lambda df: sorted(map(tuple, df.collect()))
-
-    # reference run at the build-time (broadcastable) geometry
-    small = str(tmp_path / "small")
-    ingest_state_build(docs, small, m_bits=4096)
-    want = key(ingest_pipeline_incremental(batch, small))
-
-    # same corpus, bloom compacted ABOVE the broadcast gate
-    big = str(tmp_path / "big")
-    big_m = 1 << 21
-    assert big_m > BLOOM_BROADCAST_MAX_BITS
-    ingest_state_build(docs, big, m_bits=4096)
-    ingest_state_compact(spark, big, m_bits=big_m)
-    bt, mb, kh = _bloom_geometry(spark, big, 4096, 3)
-    assert mb == big_m
-
-    # the prescreen probe exactly as the ingest builds it; AQE off so
-    # the executed plan is a plain tree the walker can traverse
-    digest = F.sha2(F.coalesce(F.col("text").cast("string"), F.lit("")), 256)
-    probes = batch.select(digest.alias("dg"))
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        verdict = bloom_maybe_contains(probes, bt, "dg", mb, kh)
-        got = {r["k"]: r["maybe"] for r in verdict.collect()}
-        # executed plan: NO BroadcastExchange carries the parquet
-        # position table — the only broadcasts are batch-sized frames
-        # (probe positions, hit counts)
-        assert not any(_bcast_filescan_flags(verdict)), (
-            "corpus-scale bloom table must not ride a broadcast"
-        )
-
-        # forcing the r13 transport (gate lifted) gives identical
-        # verdicts from the opposite shape: the position table IS the
-        # broadcast build side
-        verdict_b = bloom_maybe_contains(
-            probes, bt, "dg", mb, kh, broadcast_max_bits=big_m
-        )
-        got_b = {r["k"]: r["maybe"] for r in verdict_b.collect()}
-        assert got == got_b
-        assert any(_bcast_filescan_flags(verdict_b))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-    # end to end: receipts identical across geometries
-    assert key(ingest_pipeline_incremental(batch, big)) == want
 
 
 def test_ingest_assignments_hide_uncommitted_batch(spark, tmp_path):

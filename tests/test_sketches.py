@@ -213,6 +213,81 @@ def test_bloom_no_false_negatives(spark):
     assert 0 < fps < 500
 
 
+
+def _bcast_filescan_flags(df) -> list[bool]:
+    """For every BroadcastExchange in the EXECUTED plan (AQE off so the
+    tree is plain), whether its build side DIRECTLY carries a parquet
+    scan's rows — i.e. a file scan with no aggregation between scan
+    and broadcast.  A broadcast of an AGGREGATED frame that merely has
+    a scan upstream (the batch-sized hit counts) is the healthy shape;
+    a broadcast whose payload IS the table is the scale bug the bloom
+    transport gate exists to prevent."""
+    flags = []
+
+    def walk(jp):
+        name = jp.nodeName()
+        if "BroadcastExchange" in name:
+            ts = jp.treeString()
+            has_scan = "Scan parquet" in ts or "FileScan" in ts
+            reduced = "HashAggregate" in ts or "SortAggregate" in ts
+            flags.append(has_scan and not reduced)
+            return
+        kids = jp.children()
+        for i in range(kids.length()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return flags
+
+
+def test_bloom_large_geometry_streams_not_broadcasts(spark, tmp_path):
+    """r14 (VERDICT r13 #2): a position table above the broadcast gate
+    must NOT ride a broadcast — the probe inverts, broadcasting the
+    batch-sized probe positions and STREAMING the position-table scan,
+    with verdicts identical to the forced-broadcast transport."""
+    big_m = 1 << 21
+    assert big_m > sketches.BLOOM_BROADCAST_MAX_BITS
+    keys = spark.range(80).select(
+        F.sha2(F.concat(F.lit("key-"), F.col("id").cast("string")), 256)
+        .alias("dg")
+    )
+    path = str(tmp_path / "bloom")
+    sketches.bloom_build(keys, "dg", m_bits=big_m, k_hashes=3).write.parquet(
+        path
+    )
+    bt = spark.read.parquet(path)
+    inserted = [r["dg"] for r in keys.limit(5).collect()]
+    probes = spark.createDataFrame(
+        [(k,) for k in inserted] + [("a genuinely novel probe key",)],
+        "dg string",
+    )
+
+    # AQE off so the executed plan is a plain tree the walker can
+    # traverse
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        verdict = sketches.bloom_maybe_contains(probes, bt, "dg", big_m, 3)
+        got = {r["k"]: r["maybe"] for r in verdict.collect()}
+        # executed plan: NO BroadcastExchange carries the parquet
+        # position table — the only broadcasts are batch-sized frames
+        # (probe positions, hit counts)
+        assert not any(_bcast_filescan_flags(verdict)), (
+            "corpus-scale bloom table must not ride a broadcast"
+        )
+
+        # lifting the gate gives identical verdicts from the opposite
+        # shape: the position table IS the broadcast build side
+        verdict_b = sketches.bloom_maybe_contains(
+            probes, bt, "dg", big_m, 3, broadcast_max_bits=big_m
+        )
+        got_b = {r["k"]: r["maybe"] for r in verdict_b.collect()}
+        assert got == got_b
+        assert any(_bcast_filescan_flags(verdict_b))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    assert all(got[k] for k in inserted), "false negative!"
+
 def test_sample_quantiles_full_rate_is_exact(spark):
     """rate_log2=0 samples everything, so the sketch's order statistics
     ARE the exact ones: rank ceil(q*n/1000) over 0,10,...,990."""

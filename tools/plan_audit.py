@@ -122,9 +122,9 @@ SHOWCASE = [
     ("ann_delete_query", "ANN takedown: the tombstone table anti-joins (broadcast) out of the stored cells scan BEFORE candidate generation — a delete is an O(ids) append, the cells/codes tables and frozen books are untouched, and every surviving ranking is bit-identical"),
     ("ann_recall_after_append", "the drift alarm for the frozen-quantizer trade: both legs reuse their own checked plans (brute truth, appended-artifact ADC); the intersection is an equi-join on (probe, neighbor) + per-probe count — no new shuffle shapes"),
     ("ann_partitioned_query", "the 100 TB layout: the unified index is hive-partitioned by cell and the probed-cell set (driver-side, codebook-scale math) is a PARTITION filter on the scan — nprobe of n_cells directories read before any join; PartitionFilters pinned in tests/test_plans.py"),
-    ("ingest_incremental", "steady-state ingest: batch text is the ONLY text read (one Arrow pass over the batch front); batch-vs-corpus candidates come from a bucket join against the standing postings table (batch side broadcast); corpus-internal pairs read pre-verified from the state; the CC relabel runs over a BATCH-SIZED graph (new pairs + touched clusters' star edges from the standing assign table) — the standing pair graph is never rescanned; since r14 every per-batch state write is batch-sized too (the bloom OR-in is an append of the batch's positions, not a rewrite of the corpus-sized table)"),
+    ("ingest_incremental", "steady-state ingest: batch text is the ONLY text read (one Arrow pass over the batch front); batch-vs-corpus candidates come from a bucket join against the standing postings table (batch side broadcast); corpus-internal pairs read pre-verified from the state; the CC relabel runs over a BATCH-SIZED graph (new pairs + touched clusters' star edges from the standing assign table) — the standing pair graph is never rescanned; decontamination is one exact semi-join that SCANS the standing digests against the broadcast batch digests (no sketch prescreen); every per-batch state write is a batch-sized append"),
     ("ingest_reassign", "merge-shaped ingest receipts: the standing assign table reads as base ∪ latest-per-doc delta with an r14 digest-membership filter hiding uncommitted-batch survivor rows (delta ids broadcast against the scanned digests table — every probe broadcasts the batch-sized side, the corpus-scale base/digests are scanned, never shuffled); reassignments were computed on the batch-sized star graph and appended, so the returned plan is exactly that base+delta read"),
-    ("ingest_compact_resize", "bloom lifecycle: the compactor folds every state table through the staged swap and rebuilds the membership sketch at auto-sized geometry carried in the table's own columns; the post-resize ingest receipt plan is a bare FileScan of the durable batch receipt"),
+    ("ingest_compact_resize", "a compaction between two batches changes no verdict: the compactor folds every state table through the staged swap (params manifest untouched); the post-compaction ingest receipt plan is a bare FileScan of the durable batch receipt"),
     ("ann_retrain_query", "the drift-alarm response: retrain = ann_index_build's two Arrow passes over the current corpus (books ride the task closure, vectors never shuffle) into a staged generation, then a root-_COMMIT-marked directory swap — the query side is the standard stored-artifact scan + broadcast probe→cell pruning, identical to the fresh-build plan"),
 ]
 
